@@ -960,7 +960,9 @@ object Dedup {
    * heavy-shingle split below: head shingles are counted candidate-first
    * (the [[jaccardFor]] shape), everything else keeps the skinny
    * self-join. Both verifications are exact; the split is bytes, not
-   * answers.
+   * answers. Duplicate candidate rows are collapsed in the prune branch
+   * (one output row per pair); the head-free branch repeats the output
+   * row once per duplicate, each with the right value.
    */
   def jaccardForBySh(pairs0: DataFrame, sh: DataFrame,
       pruneCandidateDocs: Option[Boolean] = None): DataFrame = {
@@ -1007,8 +1009,14 @@ object Dedup {
     }
     // in the prune branch the candidate table is consumed twice (the
     // doc semi-join + the final inner join) — pin it so the candidate
-    // join runs once; unpruned it is consumed once, no pin needed
-    val pairs = if (doPrune) pairs0.localCheckpoint() else pairs0
+    // join runs once; unpruned it is consumed once, no pin needed.
+    // Deduplicate before the pin: the heavy-shingle split below counts
+    // heavy overlaps candidate-first, so a repeated (doc0, doc1) row
+    // would multiply `ih` and give a WRONG jaccard (the head-free plan
+    // only repeats its output row, with the right value)
+    val pairs =
+      if (doPrune) pairs0.dropDuplicates("doc0", "doc1").localCheckpoint()
+      else pairs0
     val shp =
       if (doPrune) {
         val candDocs = pairs.select(col("doc0").as("doc_id"))

@@ -1058,7 +1058,8 @@ object Relational {
    * the rule table is result-sized. The classic Apriori pruning
    * argument bounds the pair explosion: a part in p orders contributes
    * ≤ C(basket,2) per order, and the min-support filter discards the
-   * long tail before anything joins back.
+   * long tail before anything joins back. Any `minSupport ≤ 1` keeps
+   * every co-ordered pair (every pair's support is ≥ 1).
    *
    * `maxBasket` is the hot-key cap (the [[graft.ext.Graph.linkPredict]]
    * maxDeg / dfCapShingles analogue, VERDICT r8 ask #2): the pair join
@@ -1076,15 +1077,13 @@ object Relational {
    * basket tail (TPC-H's is ≤ 7; retail carts ~10²).
    *
    * EAGER EXECUTION (ADVICE r13): when `maxBasket >` the heavy-basket
-   * split threshold ([[BasketSplitThreshold]]), constructing this
-   * DataFrame runs Spark jobs immediately — the basket-size probe
-   * collect plus two eager localCheckpoint pins (see
-   * [[basketPairSupports]]). With `maxBasket ≤` the threshold the
-   * build stays fully lazy.
+   * split threshold ([[BasketSplitThreshold]]) and `minSupport > 1`,
+   * constructing this DataFrame runs Spark jobs immediately — the
+   * basket-size probe collect plus two eager localCheckpoint pins (see
+   * [[basketPairSupports]]). Otherwise the build stays fully lazy.
    */
   def basketRules(lineitem: DataFrame, minSupport: Long,
       maxBasket: Long): DataFrame = {
-    require(minSupport >= 1)
     require(maxBasket >= 2, "a basket needs 2 items to form a pair")
     val op0 = lineitem.select(col("l_orderkey").as("ok"),
       col("l_partkey").as("p")).distinct()
@@ -1166,7 +1165,9 @@ object Relational {
           col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
         .agg(count(lit(1)).as("sup_ab"))
-    if (maxBasket <= BasketSplitThreshold)
+    // minSupport ≤ 1 keeps every co-occurring pair: there is nothing for
+    // the split to prune, and the key collect below needs a positive cap
+    if (maxBasket <= BasketSplitThreshold || minSupport <= 1)
       return exactPairs(op).where(col("sup_ab") >= minSupport)
     val bigOk = sizes.where(col("basket") > BasketSplitThreshold &&
       col("basket") <= maxBasket).select("ok")

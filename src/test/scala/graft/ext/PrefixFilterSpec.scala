@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -141,18 +141,14 @@ class PrefixFilterSpec extends SparkSpec {
     viaPrefix.foreach { case (k, v) => assertApprox(v, exhaustive(k)) }
   }
 
-  test("heavy-shingle split verification is exact on a planted df-head") {
-    // r14: jaccardForBySh's prune branch splits the verify by shingle
-    // weight (heavy iff df² > Σdf) — this fixture makes the split's
-    // three row classes all non-empty and checks byte-equality with the
-    // pair-first reference on a candidate list that includes them:
-    //   - docs 0/1 share ONLY heavy shingles (i must come from the
-    //     candidate-first branch alone — the full_outer's right side),
-    //   - docs 2/3 share ONLY light shingles (left side alone),
-    //   - docs 4/5 share both (the coalesce-sum),
-    //   - docs 6/7 share nothing (no row in either spelling).
-    // Heavy head: 3 shingles (900, 901, 902) in EVERY doc of a 40-doc
-    // chorus → df = 44-ish, Σdf ≈ 40·13 + extras, so df² > Σdf fires.
+  private def sorted(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).sortBy(_._1)
+
+  /** A planted df-head for the heavy-shingle split: 3 shingles (900,
+    * 901, 902) in EVERY doc of a 40-doc chorus → df = 44-ish, Σdf ≈
+    * 40·13 + extras, so df² > Σdf fires; docs 0-7 are the planted row
+    * classes of [[dfHeadCands]]. */
+  private lazy val dfHeadShingles = {
     val chorus = (10 until 50).map { d =>
       d.toLong -> ((900L to 902L) ++ (1L to 10L).map(_ + 1000L * d))
     }
@@ -165,22 +161,41 @@ class PrefixFilterSpec extends SparkSpec {
       5L -> ((900L to 902L) ++ Seq(7000L, 7002L)),
       6L -> Seq(8000L, 8001L),                   // nothing with 7
       7L -> Seq(8100L, 8101L))
-    val sh = (chorus ++ planted).flatMap { case (d, ss) => ss.map(d -> _) }
+    (chorus ++ planted).flatMap { case (d, ss) => ss.map(d -> _) }
       .toDF("doc_id", "sh").localCheckpoint()
-    // sanity: the head really is heavy under the split's own rule
-    val postings = sh.count()
-    val maxDf = sh.groupBy("sh").count().agg(org.apache.spark.sql.functions.max("count"))
+  }
+
+  /** The planted classes plus the chorus paired up (10-11, 12-13, …):
+    * the split weighs shingles AFTER the prune's candidate-doc
+    * semi-join, so the chorus must be candidates for the head to stay
+    * heavy there. */
+  private lazy val dfHeadCands =
+    (Seq((0L, 1L), (2L, 3L), (4L, 5L), (6L, 7L), (0L, 2L)) ++
+      (10L until 50L by 2).map(d => (d, d + 1))).toDF("doc0", "doc1")
+
+  test("heavy-shingle split verification is exact on a planted df-head") {
+    // r14: jaccardForBySh's prune branch splits the verify by shingle
+    // weight (heavy iff df² > Σdf) — this fixture makes the split's
+    // three row classes all non-empty and checks byte-equality with the
+    // pair-first reference on a candidate list that includes them:
+    //   - docs 0/1 share ONLY heavy shingles (i must come from the
+    //     candidate-first branch alone — the full_outer's right side),
+    //   - docs 2/3 share ONLY light shingles (left side alone),
+    //   - docs 4/5 share both (the coalesce-sum),
+    //   - docs 6/7 share nothing (no row in either spelling).
+    val sh = dfHeadShingles
+    // sanity: the head really is heavy under the split's own rule, over
+    // the candidate documents the prune keeps
+    val candDocs = dfHeadCands.select(col("doc0").as("doc_id"))
+      .union(dfHeadCands.select(col("doc1").as("doc_id")))
+    val kept = sh.join(candDocs, Seq("doc_id"), "left_semi")
+    val postings = kept.count()
+    val maxDf = kept.groupBy("sh").count().agg(org.apache.spark.sql.functions.max("count"))
       .collect()(0).getLong(0)
     assert(maxDf * maxDf > postings, s"fixture not df-headed: $maxDf² ≤ $postings")
-    val cands = Seq((0L, 1L), (2L, 3L), (4L, 5L), (6L, 7L), (0L, 2L))
-      .toDF("doc0", "doc1")
-    val reference = Dedup.jaccardFor(cands, sh)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .sortBy(_._1)
+    val reference = sorted(Dedup.jaccardFor(dfHeadCands, sh))
     for (forced <- Seq(Some(true), None)) {
-      val split = Dedup.jaccardForBySh(cands, sh, forced)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        .sortBy(_._1)
+      val split = sorted(Dedup.jaccardForBySh(dfHeadCands, sh, forced))
       assert(split.toSeq == reference.toSeq, s"prune=$forced")
     }
     // the classes behaved as designed: heavy-only pair present with the
@@ -191,5 +206,22 @@ class PrefixFilterSpec extends SparkSpec {
     assertApprox(m((2L, 3L)), 3.0 / 5)
     assertApprox(m((4L, 5L)), 4.0 / 6)
     assert(!m.contains((6L, 7L)))
+  }
+
+  test("duplicate candidate rows: the prune branch verifies each pair once") {
+    // Every candidate fed twice. The prune branch's heavy-shingle split
+    // counts heavy overlaps candidate-first, so an unmerged duplicate
+    // would double `ih` and give a wrong jaccard; it must collapse them
+    // and equal jaccardFor on the distinct pairs row for row. The
+    // head-free branch repeats each output row per duplicate, with the
+    // right value, so its DISTINCT rows must equal the same reference.
+    val sh = dfHeadShingles
+    val twice = dfHeadCands.union(dfHeadCands)
+    val reference = sorted(Dedup.jaccardFor(dfHeadCands, sh))
+    assert(reference.nonEmpty)
+    val pruned = sorted(Dedup.jaccardForBySh(twice, sh, Some(true)))
+    assert(pruned.toSeq == reference.toSeq, "prune=Some(true)")
+    val headFree = sorted(Dedup.jaccardForBySh(twice, sh, Some(false)))
+    assert(headFree.distinct.toSeq == reference.toSeq, "prune=Some(false)")
   }
 }

@@ -693,6 +693,15 @@ class RelationalSpec extends SparkSpec {
     cp.foreach(r => assertApprox(r.getAs[Double]("lift"), 1.0))
   }
 
+  /** Brute-force canonical (a < b) pair supports at a threshold — the
+    * independent reference for [[Relational.basketRules]]. */
+  private def brute(rows: Seq[(Long, Long)], minSupport: Long): Map[(Long, Long), Long] = {
+    val byOrder = rows.distinct.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    byOrder.values.flatMap(ps => for (a <- ps; b <- ps if a < b) yield (a, b))
+      .groupBy(identity).view.mapValues(_.size.toLong)
+      .filter(_._2 >= minSupport).toMap
+  }
+
   test("basket heavy split: m = 2 heavy orders, boundary candidates, and the m >= minSupport fallback") {
     // r14 certification (VERDICT r13 ask #5): the heavy-basket split has
     // only ever been DRIVEN with m = 1 (the skew exhibit). This fixture
@@ -719,12 +728,6 @@ class RelationalSpec extends SparkSpec {
       3L -> 2000L, 3L -> 2002L,
       4L -> 2000L, 4L -> 2002L,
       5L -> 2000L, 5L -> 2002L, 5L -> 2001L)
-    def brute(rows: Seq[(Long, Long)], minSupport: Long): Map[(Long, Long), Long] = {
-      val byOrder = rows.distinct.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-      byOrder.values.flatMap(ps => for (a <- ps; b <- ps if a < b) yield (a, b))
-        .groupBy(identity).view.mapValues(_.size.toLong)
-        .filter(_._2 >= minSupport).toMap
-    }
     for (nHeavy <- Seq(2, 3)) {
       val heavies = (1 to nHeavy).flatMap(i =>
         heavy(100L + i, 1L + 500L * (i - 1), 1030L + 500L * (i - 1)))
@@ -746,6 +749,29 @@ class RelationalSpec extends SparkSpec {
         // big-only pairs never appear
         assert(!gotCanon.contains((700L, 701L)))
       }
+    }
+  }
+
+  test("basket rules: minSupport <= 1 keeps every co-ordered pair, split threshold or not") {
+    // Any threshold <= 1 keeps every pair, so there is nothing for the
+    // heavy-basket split to prune: with maxBasket above the split
+    // threshold these must take the exact self-join before the split's
+    // key collect (whose limit(min(minSupport, 10^6)) throws on a
+    // negative cap) and equal brute force — including the heavy order's
+    // whole pair surface.
+    val heavy = (1L to Relational.BasketSplitThreshold + 1).map(9L -> _)
+    val rows = Seq(1L -> 5000L, 1L -> 5001L, 2L -> 5000L, 2L -> 5002L,
+      3L -> 5000L, 3L -> 5001L, 4L -> 5003L, 5L -> 1L, 5L -> 5000L) ++ heavy
+    val li = rows.toDF("l_orderkey", "l_partkey")
+    for (minSupport <- Seq(-1L, 0L, 1L)) {
+      val got = Relational.basketRules(li, minSupport, maxBasket = 5000L)
+        .where(col("ante") < col("cons"))
+        .collect()
+        .map(r => (r.getAs[Long]("ante"), r.getAs[Long]("cons")) ->
+          r.getAs[Long]("sup_ab")).toMap
+      val exp = brute(rows, minSupport)
+      assert(got == exp, s"minSupport=$minSupport: " +
+        s"missing=${(exp.keySet -- got.keySet).take(5)} extra=${(got.keySet -- exp.keySet).take(5)}")
     }
   }
 }
